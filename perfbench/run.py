@@ -103,6 +103,7 @@ def build(sid, jars):
         repos = os.path.expanduser("~/.sbt/repositories")
         cmd = (["sbt", "--batch", "-Dsbt.log.noformat=true",
                 "-Dsbt.server.autostart=false", "-Dsbt.offline=true",
+                "-J-XX:-UsePerfData",
                 "-Dsbt.global.base=" + os.path.join(BUILD, "sbt-global")] +
                (["-Dsbt.override.build.repos=true",
                  "-Dsbt.repository.config=" + repos]
@@ -158,7 +159,8 @@ def main():
            [f"--add-opens={m}=ALL-UNNAMED" for m in JDK17_OPENS] +
            [f"-Xms{HEAP}", f"-Xmx{HEAP}", "-XX:+AlwaysPreTouch",
             "-XX:ReservedCodeCacheSize=512m",
-            "-XX:+UseCodeCacheFlushing", "-Dspark.ui.enabled=false",
+            "-XX:+UseCodeCacheFlushing", "-XX:-UsePerfData",
+            "-Dspark.ui.enabled=false",
             "-Dspark.sql.session.timeZone=UTC", f"-Djava.io.tmpdir={tmp}",
             "-cp", CLASSES + os.pathsep + os.path.join(jars, "*"),
             "perfbench.Main",
