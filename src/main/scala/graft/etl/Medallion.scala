@@ -1,11 +1,41 @@
 package graft.etl
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
 import graft.expr.Aqi
 import graft.model.Schemas
+
+/** A layer's validity gate: named reject predicates, in check order. A
+  * row passes when it fails none. A rejected row counts under the first
+  * predicate it fails, so the counts by reason sum to the rows dropped.
+  * A predicate may be null only on rows an earlier one rejects (a null
+  * value is not `< 0`), so neither the filter nor the counts see null. */
+final case class Gate(rejects: (String, Column)*) {
+
+  def keep: Column = rejects.map { case (_, r) => !r }.reduce(_ && _)
+
+  /** `df` filtered by the gate. With an `audit`, the rows reaching the
+    * gate and the rejects by reason are observed in the same pass. */
+  def apply(df: DataFrame, audit: Option[Observation]): DataFrame = {
+    val firstFailing = rejects.indices.map { i =>
+      val (reason, r) = rejects(i)
+      count_if(rejects.take(i).foldRight(r) { case ((_, p), q) => !p && q })
+        .as(reason)
+    }
+    audit.fold(df)(o => df.observe(o, count(lit(1)).as("rows"),
+      firstFailing: _*)).filter(keep)
+  }
+
+  /** (rows reaching the gate, rejects by reason) from a completed audit. */
+  def read(audit: Observation): (Long, Map[String, Long]) = {
+    val m = audit.get
+    (m("rows").asInstanceOf[Long],
+      rejects.map { case (reason, _) =>
+        reason -> m(reason).asInstanceOf[Long] }.toMap)
+  }
+}
 
 /** Bronze → Silver → Gold medallion transforms (SURVEY.md §1.3, §2.2, §2.4).
   * All are source-agnostic (DataFrame in → DataFrame out) so the same code
@@ -26,17 +56,23 @@ object Bronze {
     raw.select(from_json(col(jsonCol).cast("string"), Schemas.wire).as("data"))
       .select("data.*")
 
+  /** P3: the null gate. */
+  val gate: Gate = Gate(
+    "null_datetime" -> col("datetime").isNull,
+    "null_location" -> col("location_id").isNull,
+    "null_parameter" -> col("parameter").isNull)
+
   /** P2 (timestamp casts) + P3 (null gate) + P4 (partition columns).
-    * Accepts either string or already-cast timestamps. */
-  def fromWire(wire: DataFrame): DataFrame = {
+    * Accepts either string or already-cast timestamps. `audit` observes
+    * the gate (see [[Gate.apply]]). */
+  def fromWire(wire: DataFrame, audit: Option[Observation] = None)
+      : DataFrame = {
     def ts(name: String) =
       if (wire.schema(name).dataType == StringType) to_timestamp(col(name))
       else col(name)
-    wire
+    gate(wire
       .withColumn("datetime", ts("datetime"))
-      .withColumn("ingestion_timestamp", ts("ingestion_timestamp"))
-      .filter(col("datetime").isNotNull && col("location_id").isNotNull &&
-        col("parameter").isNotNull)
+      .withColumn("ingestion_timestamp", ts("ingestion_timestamp")), audit)
       .withColumn("year", year(col("datetime")))
       .withColumn("month", month(col("datetime")))
       .withColumn("day", dayofmonth(col("datetime")))
@@ -59,15 +95,22 @@ object Silver {
     * ingestion_timestamp) + P6 (validation: non-null, ≥0, non-NaN) —
     * batch_processor.py:145-166. Note batch Gold inherits rows whose aqi
     * is null (quirk SURVEY.md §2.10-3): there is deliberately NO aqi
-    * filter here. */
-  def fromBronze(bronze: DataFrame): DataFrame =
-    bronze
+    * filter here. `audit` observes the gate (see [[Gate.apply]]). */
+  def fromBronze(bronze: DataFrame, audit: Option[Observation] = None)
+      : DataFrame =
+    gate(bronze
       .select(
         col("datetime"), col("location_id"), col("location_name"),
         col("country"), col("latitude"), col("longitude"), col("parameter"),
         col("value_standard").as("value"), col("aqi"), col("aqi_category"),
-        col("year"), col("month"), col("day"))
-      .filter(col("value").isNotNull && col("value") >= 0 && !isnan(col("value")))
+        col("year"), col("month"), col("day")), audit)
+
+  /** P6: the value gate. NaN sorts above every number in Spark, so a NaN
+    * passes `value < 0` and is caught by the last predicate. */
+  val gate: Gate = Gate(
+    "null_value" -> col("value").isNull,
+    "negative_value" -> (col("value") < 0),
+    "nan_value" -> isnan(col("value")))
 
   /** Typed view for compile-time field checks where ergonomics help
     * (SURVEY.md §1.6: Dataset[Measurement] for the core API; DataFrame

@@ -1,6 +1,7 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.functions._
 
 /** Sources & sinks (SURVEY.md §2.1): partitioned parquet (S4), CSV export
   * (S9), S3A wiring (S6). The medallion writes are hive-partitioned by
@@ -8,18 +9,41 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * pruning (filter on year=…) skip data at the file-listing level. */
 object Sinks {
 
+  /** The hive partition columns of every medallion layer. */
+  val DayKeys: Seq[String] = Seq("year", "month", "day")
+
   /** S4: `mode(Overwrite).partitionBy(year,month,day).parquet(path)`
-    * (batch_processor.py:125-129). Repartitions by the partition keys
-    * first: without it every task writes a file into every partition dir
-    * (tasks × partitions small files — the classic at-scale
-    * anti-pattern); with it each hive partition is written by the task(s)
-    * owning that key. AQE coalescing keeps per-task output reasonable. */
-  def writePartitioned(df: DataFrame, path: String): Unit = {
-    import org.apache.spark.sql.functions.col
-    df.repartition(col("year"), col("month"), col("day"))
+    * (batch_processor.py:125-129), returning the rows written. The count
+    * is a `Dataset.observe` metric of the write itself, not the
+    * reference's second execution of the plan (`count()` after the
+    * write, batch_processor.py:131).
+    *
+    * The frame is written with the partitioning it has. A task writes one
+    * file into every day it holds, so the caller clusters rows by day
+    * first: with [[clusterByDay]], or with an aggregate that already
+    * shuffles on the day keys (Gold). */
+  def writePartitioned(df: DataFrame, path: String): Long = {
+    val rows = Observation()
+    df.observe(rows, count(lit(1)).as("rows"))
       .write.mode(SaveMode.Overwrite)
-      .partitionBy("year", "month", "day")
+      .partitionBy(DayKeys: _*)
       .parquet(path)
+    rows.get("rows").asInstanceOf[Long]
+  }
+
+  /** Clusters rows by day over `defaultParallelism` buckets, so each day
+    * is written by one task and every core writes. Days are dealt out
+    * round-robin by epoch day, so consecutive days never share a bucket
+    * while another stays empty; a null day goes to bucket 0.
+    *
+    * An explicit bucket id, not `repartition(year, month, day)`: AQE
+    * coalesces that small hash shuffle into one partition, which put a
+    * whole layer's write in a single task. A shuffle with a fixed
+    * partition count is never coalesced. */
+  def clusterByDay(df: DataFrame): DataFrame = {
+    val n = df.sparkSession.sparkContext.defaultParallelism
+    val epochDay = unix_date(make_date(col("year"), col("month"), col("day")))
+    df.repartitionById(n, coalesce(pmod(epochDay, lit(n)), lit(0)))
   }
 
   /** S9: CSV export with header (clickhouse_queries.sql:167-183 analog). */

@@ -31,7 +31,8 @@ object SinkQueries {
     // recovery) → per-partition counts
     "s4_partitioned_write" -> ((s, d) => {
       val path = tmp("bronze_part", d)
-      Sinks.writePartitioned(bronze(s, d).drop("props"), path)
+      Sinks.writePartitioned(
+        Sinks.clusterByDay(bronze(s, d).drop("props")), path)
       s.read.parquet(path)
         .groupBy(col("year"), col("month"), col("day"))
         .agg(count(lit(1)).as("n_rows"),

@@ -139,8 +139,8 @@ class PlanShapeSpec extends AnyFunSuite {
     // same directory; removed after the assertion
     val path = s"/tmp/graft_sink_plan_prune_${java.util.UUID.randomUUID}"
     try {
-      graft.io.Sinks.writePartitioned(
-        graft.queries.PipelineQueries.bronze(spark, dir).drop("props"), path)
+      graft.io.Sinks.writePartitioned(graft.io.Sinks.clusterByDay(
+        graft.queries.PipelineQueries.bronze(spark, dir).drop("props")), path)
       val df = spark.read.parquet(path)
         .filter(col("year") === 2024 && col("month") === 1 &&
           col("day") === 15)
